@@ -116,7 +116,6 @@ def main():
     ap.add_argument("--seconds", type=int, default=12)
     ap.add_argument("--trace", choices=["0", "1"], default="0")
     ap.add_argument("--volume", help="share of BASELINE volume (default: the benchmark's)")
-    ap.add_argument("--setups", help="set-ups per run (default: the benchmark's)")
     ap.add_argument("--record", help="append the default-seed table fingerprints to this file")
     args = ap.parse_args()
 
@@ -124,7 +123,7 @@ def main():
         "--workload", args.workload, "--seed", str(args.seed), "--seconds", str(args.seconds),
         "--trace", args.trace, "--work", str(OUT / "work"),
         "--expected", str(BENCH / "expected.tsv")])
-    for opt in ("volume", "setups", "record"):
+    for opt in ("volume", "record"):
         if getattr(args, opt) is not None:
             cmd += [f"--{opt}", getattr(args, opt)]
     rc, out = run_group(cmd, cwd=ROOT, timeout=args.seconds + 150, capture=True)

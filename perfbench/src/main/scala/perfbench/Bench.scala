@@ -63,7 +63,7 @@ final class Ctx(
 
 final case class Opts(
     workload: String, seed: Long, seconds: Int, trace: Boolean, work: Path,
-    volume: Double, setups: Int, expected: Option[Path], record: Option[Path])
+    volume: Double, expected: Option[Path], record: Option[Path])
 
 object Opts {
   val DefaultSeed = 1L
@@ -74,7 +74,7 @@ object Opts {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
       case other => throw new IllegalArgumentException(s"bad arguments: ${other.mkString(" ")}")
     }.toMap
-    val known = Set("workload", "seed", "seconds", "trace", "work", "volume", "setups", "expected", "record")
+    val known = Set("workload", "seed", "seconds", "trace", "work", "volume", "expected", "record")
     require(kv.keySet.subsetOf(known), s"unknown options: ${kv.keySet -- known}")
     Opts(
       workload = kv.getOrElse("workload", throw new IllegalArgumentException("--workload is required")),
@@ -83,7 +83,6 @@ object Opts {
       trace = kv.get("trace").contains("1"),
       work = Paths.get(kv.getOrElse("work", ".bench_build/work")).toAbsolutePath,
       volume = kv.get("volume").map(_.toDouble).getOrElse(DefaultVolume),
-      setups = kv.get("setups").map(_.toInt).getOrElse(3),
       expected = kv.get("expected").map(Paths.get(_)),
       record = kv.get("record").map(Paths.get(_)))
   }
@@ -96,6 +95,8 @@ trait Workload {
   def setup(dir: Path): Unit
   def warmUp(): Unit
   def iterate(traced: Boolean): Unit
+  /** Drops the benchmark's own inputs before the heap is measured. */
+  def release(): Unit
   /** Wall time of each iteration's timed work, flagged when traced. */
   def unitMs: collection.Seq[(Boolean, Double)]
   /** End-to-end values other than setup_s and live_heap_mb. */

@@ -9,7 +9,7 @@ import graft.Sessions
   * Prints one JSON result as the last line of stdout; logs go to stderr.
   */
 object Main {
-  val Workloads: Seq[String] = Seq("pipeline_initial", "pipeline_restate", "evals_upsert_mor")
+  val Workloads: Seq[String] = Seq("pipeline_initial", "pipeline_restate", "evals_upsert_mor", "operator_mix")
 
   /** End-to-end metrics, printed with `--trace 0`. */
   val EndToEnd: Seq[(String, String)] = Seq(
@@ -64,12 +64,13 @@ object Main {
       "spark.gc_ms" -> "ms",
       "catalyst.planning_ms" -> "ms",
       "catalyst.query_executions" -> "count",
-      "trace.overhead_ratio" -> "ratio")
+      "trace.overhead_ratio" -> "ratio") ++
+    OperatorWorkload.Rows.flatMap(r => Seq(s"op.${r}_s" -> "s", s"op.$r.core_util" -> "ratio"))
 
   def main(args: Array[String]): Unit = {
     val opts = Opts.parse(args)
     require(Workloads.contains(opts.workload), s"unknown workload ${opts.workload}; one of ${Workloads.mkString(", ")}")
-    require(opts.seconds >= 1 && opts.setups >= 1, "--seconds and --setups must be positive")
+    require(opts.seconds >= 1, "--seconds must be positive")
     val t0 = System.nanoTime()
     val spark = Sessions.local(Runtime.getRuntime.availableProcessors().toString)
     spark.sparkContext.setLogLevel("ERROR")
@@ -83,25 +84,20 @@ object Main {
       case "pipeline_initial" => new PipelineWorkload(ctx, restate = false)
       case "pipeline_restate" => new PipelineWorkload(ctx, restate = true)
       case "evals_upsert_mor" => new MorWorkload(ctx)
+      case "operator_mix" => new OperatorWorkload(ctx)
     }
     val root = opts.work.resolve(s"${opts.workload}-${opts.seed}")
     FsStats.delete(root)
     try {
-      // set-up (generation and seeding) runs several times and reports
-      // its median; only the last one's state feeds the measured loop,
-      // after one warm-up iteration that set-up is also charged with
-      def timedSetupMs(body: => Unit): Double = {
-        val c0 = ctx.checkNanos
-        val s0 = System.nanoTime()
-        body
-        Stats.millisSince(s0) - (ctx.checkNanos - c0) / 1e6
-      }
-      val setupMs = (1 to opts.setups).map { k =>
-        val ms = timedSetupMs(workload.setup(root.resolve(s"setup-$k")))
-        if (k > 1) FsStats.delete(root.resolve(s"setup-${k - 1}"))
-        ms
-      }
-      val warmUpMs = timedSetupMs(workload.warmUp())
+      // set-up is charged with generation, seeding and two warm-up
+      // iterations (after one the JIT is still compiling, and the next
+      // iteration runs 10-30% faster); the time of correctness checks
+      // is kept out of it
+      val c0 = ctx.checkNanos
+      val s0 = System.nanoTime()
+      workload.setup(root)
+      (1 to 2).foreach(_ => workload.warmUp())
+      val setupMs = sessionMs + Stats.millisSince(s0) - (ctx.checkNanos - c0) / 1e6
       // closed loop, one client, at least two iterations so a slow run
       // still takes its medians over the same work; with --trace 1 odd
       // iterations are traced and even ones give the untraced baseline
@@ -124,15 +120,16 @@ object Main {
           System.err.println(s"[perfbench] wrote $spans spans")
           PerLayer.map { case (n, u) => (n, values.getOrElse(n, 0.0), u) }
         } else {
-          val values = workload.endToEnd ++ Map(
-            "setup_s" -> (sessionMs + Stats.median(setupMs) + warmUpMs) / 1000.0,
-            "live_heap_mb" -> liveHeapMb())
-          EndToEnd.map { case (n, u) => (n, values(n), u) }
+          val values = workload.endToEnd + ("setup_s" -> setupMs / 1000.0)
+          // the heap is measured once the benchmark's own inputs are dropped
+          workload.release()
+          val all = values + ("live_heap_mb" -> liveHeapMb())
+          EndToEnd.map { case (n, u) => (n, all(n), u) }
         }
       opts.record.foreach(Recorded.append(_, ctx.observed.toMap))
-      System.err.println(s"[perfbench] ${opts.workload} seed ${opts.seed}: $i iterations, " +
-        s"session ${f"${sessionMs / 1000}%.2f"} s, set-ups ${setupMs.map(ms => f"${ms / 1000}%.2f").mkString(" ")} s, " +
-        s"warm-up ${f"${warmUpMs / 1000}%.2f"} s")
+      System.err.println(s"[perfbench] ${opts.workload} seed ${opts.seed}: $i iterations " +
+        s"(${workload.unitMs.map(u => f"${u._2 / 1000}%.2f").mkString(" ")} s), " +
+        f"session ${sessionMs / 1000}%.2f s, set-up ${setupMs / 1000}%.2f s")
       println(Json.obj(Seq(
         "correct" -> (ctx.failed == 0),
         "attempted" -> ctx.attempted,

@@ -70,6 +70,11 @@ final class MorWorkload(ctx: Ctx) extends Workload {
     Seq(unitMs, commitMs, readMs).foreach(_.clear())
   }
 
+  def release(): Unit = {
+    base = Vector.empty
+    epochRows = Vector.empty
+  }
+
   private def frame(rows: Seq[Row]) = spark.createDataFrame(rows.asJava, schema)
 
   private lazy val rawIdx = schema.fieldIndex("raw_score")

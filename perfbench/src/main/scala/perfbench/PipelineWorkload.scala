@@ -59,7 +59,6 @@ final class PipelineWorkload(ctx: Ctx, restate: Boolean) extends Workload {
     config = CalabrioPipeline.Config(d.resolve("stage").toString, targetsDir.toString)
     val (formsJson, forms) = Forms.load(spark)
     val initial = Payloads.generate(seed, volume, forms)
-    Option(store).filter(_.nonEmpty).foreach(PayloadStore.remove)
     store = s"${d.getFileName}-${if (restate) "restated" else "initial"}"
     if (!restate) {
       val p = Payloads.render(initial, volume, formsJson)
@@ -87,6 +86,11 @@ final class PipelineWorkload(ctx: Ctx, restate: Boolean) extends Workload {
   def warmUp(): Unit = {
     iterate(traced = false)
     Seq(unitMs, writeMs, readMs).foreach(_.clear())
+  }
+
+  def release(): Unit = {
+    PayloadStore.remove(store)
+    expected = null
   }
 
   private def fullRun(ws: Seq[graft.sources.Ingest.DateWindow], id: String): Option[Seq[Pipeline.StageResult]] =
