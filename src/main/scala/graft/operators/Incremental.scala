@@ -84,8 +84,13 @@ object Incremental {
     * Contract: both histories `from → head` must be APPEND-ONLY
     * (pure-insert CDC — rewriting commits fail loudly; the
     * aggregate path `mergeAdditive` + signed CDC handles those) and
-    * `oldJoin` must be R@rFrom ⋈ S@sFrom on `key`. Returns the join
-    * at (rHead, sHead) with columns (key, R-cols, S-cols). */
+    * `oldJoin` must be R@rFrom ⋈ S@sFrom on `key`. The check is on
+    * the MANIFESTS, so it is stricter than the rows: ANY compaction,
+    * OPTIMIZE, copy-on-write or merge-on-read delete between the
+    * refresh cursors refuses, even one that leaves the logical rows
+    * unchanged — re-sync (recompute `oldJoin` at the new heads) after
+    * maintenance. Returns the join at (rHead, sHead) with columns
+    * (key, R-cols, S-cols). */
   def snapshotJoinIvm(
       oldJoin: DataFrame, rDir: String, sDir: String, key: String,
       rFrom: Long, sFrom: Long,
@@ -102,7 +107,9 @@ object Incremental {
     * their targets) — the piece an append-only materialization
     * commits, instead of rewriting M: for append-only bases M itself
     * is append-only, so a refresh is `commitAppend(ΔM)`, O(Δ) write
-    * at any |M|. */
+    * at any |M|. Same manifest-level append-only contract as
+    * `snapshotJoinIvm`: a compaction, OPTIMIZE or delete between the
+    * cursors refuses and forces a re-sync. */
   def snapshotJoinDelta(
       spark: org.apache.spark.sql.SparkSession,
       rDir: String, sDir: String, key: String,

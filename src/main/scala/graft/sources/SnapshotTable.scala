@@ -96,9 +96,13 @@ object SnapshotTable {
       seq: Long = 0L,
       bytes: Long = -1L)
 
-  /** One merge-on-read EQUALITY DELETE: `paths` name delta-sized
-    * parquet files holding the doomed key tuples (columns =
-    * `keyCols`), `seq` is the version that committed it. A delete
+  /** One merge-on-read EQUALITY DELETE: `paths` name parquet files
+    * whose `keyCols` columns hold the doomed key tuples, and `seq` is
+    * the version that committed it. The files may be key-only frames
+    * (`commitDeleteMoR`) or FULL-WIDTH data files (a MoR upsert epoch
+    * names its own data files as its delete), so `keyCols` is the
+    * projection contract: every reader selects `keyCols`, then
+    * distincts — never reads the files' other columns. A delete
     * applies to data entries with `entry.seq < seq` ONLY — a row
     * re-inserted AFTER the delete (a later merge/append, whose entry
     * carries a higher seq) is never retro-deleted, the real formats'
@@ -2059,13 +2063,74 @@ object SnapshotTable {
     }
   }
 
-  /** Test-only race injector: invoked once per commit attempt right
-    * before the manifest publish, AFTER the head read and batch write —
-    * exactly the window a real racing writer exploits. Specs assign a
-    * one-shot closure that commits a rename/drop/stream-batch here, so
-    * the lost-race revalidation paths are exercised DETERMINISTICALLY
-    * instead of by thread timing. Production cost: one no-op call. */
+  /** Test-only race injector: `transact` invokes it once per attempt
+    * of EVERY commit kind, right before the manifest publish, AFTER the
+    * head read and batch write — exactly the window a real racing
+    * writer exploits. Specs assign a closure that commits here (or
+    * throws, to model a crash), so the lost-race revalidation paths
+    * are exercised DETERMINISTICALLY instead of by thread timing.
+    * Production cost: one no-op call. */
   private[graft] var testRaceHook: () => Unit = () => ()
+
+  /** What one commit attempt decided, given the head it read. */
+  private sealed trait Attempt[+A]
+  /** Publish nothing and return `result`: a recognized replay or a
+    * no-op (nothing to compact, nothing matched). */
+  private final case class Done[A](result: A) extends Attempt[A]
+  /** Publish `next` and return `result`. `next.segments` are the prior
+    * segments its unchanged entries carry BY NAME (`head.copy` keeps
+    * the head's). `orphansOnLoss` are files only this attempt's
+    * manifest names: a lost race sweeps them before the retry. */
+  private final case class Publish[A](
+      next: Manifest, result: A, orphansOnLoss: Seq[String] = Nil)
+      extends Attempt[A]
+
+  /** The retry budget of every optimistic commit. */
+  private val MaxCommitAttempts = 20
+
+  /** THE optimistic commit: read the head (the empty v0 head when
+    * `create` and the table has no version yet), let `attempt` decide
+    * against it, fire the race seam, publish. A lost publish race
+    * sweeps the attempt's orphans and re-runs `attempt` on the new
+    * head, so every commit kind re-validates its conflict policy
+    * against exactly the manifest it publishes on top of. Staged
+    * files an attempt keeps for its retries (a batch, key files, a
+    * vector) stay the caller's; if the budget runs out ("<what> on
+    * <dir> lost 20 straight races; giving up") they are left to
+    * `gcOrphans`, like a crashed writer's. */
+  private def transact[A](
+      spark: SparkSession, dir: String, what: String, create: Boolean = false)(
+      attempt: Manifest => Attempt[A]): A = {
+    @scala.annotation.tailrec
+    def loop(n: Int): A = {
+      require(n <= MaxCommitAttempts,
+        s"$what on $dir lost $MaxCommitAttempts straight races; giving up")
+      val head = versions(spark, dir).lastOption match {
+        case Some(v) => readManifest(spark, dir, v)
+        case None if create => Manifest(0L, Ledger(), Nil, Nil)
+        case None => throw new IllegalArgumentException(
+          s"snapshot table $dir has no committed version")
+      }
+      attempt(head) match {
+        case Done(result) => result
+        case Publish(next, result, orphans) =>
+          testRaceHook()
+          if (tryPublish(spark, dir, next, carry = next.segments)) result
+          else {
+            dropOrphanBatch(spark, dir, orphans)
+            loop(n + 1)
+          }
+      }
+    }
+    loop(1)
+  }
+
+  /** `m` with its contents cleared — entries, pending deletes and
+    * schema ops — keeping the ledger and the stats/bloom
+    * declarations: the base an overwrite publishes on. */
+  private def emptied(m: Manifest): Manifest =
+    m.copy(entries = Nil, deletes = Nil, renames = Nil, drops = Nil,
+      adds = Nil, segments = Nil)
 
   /** Returns None when the batch's ledger key (batchId / streamKey)
     * turns out to be already committed — checked against EVERY head
@@ -2081,82 +2146,66 @@ object SnapshotTable {
     var opsAtWrite: (Seq[Rename], Seq[Drop]) = null
     var newEntries: Seq[Entry] = null
     var entriesFor: (Seq[String], Seq[String]) = null
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"commit to $dir lost 20 straight races; giving up")
-      val head = versions(spark, dir).lastOption.map(readManifest(spark, dir, _))
-      val headLed = head.map(_.ledger).getOrElse(Ledger())
-      if (batchId.exists(headLed.contains("", _)) ||
-        streamKey.exists(headLed.containsKey)) {
+    transact(spark, dir, "commit", create = true) { head =>
+      if (batchId.exists(head.ledger.contains("", _)) ||
+        streamKey.exists(head.ledger.containsKey)) {
         // a racing writer committed our key between head reads: the
         // batch is a recognized replay, never a duplicate append
         if (batchFiles != null) dropOrphanBatch(spark, dir, batchFiles)
-        return None
+        Done(None)
+      } else {
+        val headOps = (head.renames, head.drops)
+        if (batchFiles == null) {
+          // the batch is written AFTER the first head read, so the
+          // schema-op state it was written under is EXACTLY opsAtWrite —
+          // any op observed later arrived via a lost race and triggers
+          // the rewrite below
+          batchFiles = writeBatch(df, dir)
+          opsAtWrite = headOps
+        } else if (append && opsAtWrite != headOps) {
+          // a racing writer committed a rename/drop AFTER our batch
+          // files were written: published as-is they would carry seq >
+          // the op's seq under the OLD names, so reads would surface
+          // the stale name as a null-padded extra column and MoR key
+          // mapping would silently skip these files (ADVICE r11).
+          // Rewrite the batch under the current names, then retry.
+          // (Overwrites publish with empty rename/drop lists — the
+          // caller's names are final there; no rewrite.)
+          require(headOps._1.take(opsAtWrite._1.size) == opsAtWrite._1 &&
+            headOps._2.take(opsAtWrite._2.size) == opsAtWrite._2,
+            s"commit to $dir raced a RESTORE that rewound schema history — " +
+              "retry the commit against the restored head")
+          val newOps = (headOps._1.drop(opsAtWrite._1.size)
+            .map(Left(_): Either[Rename, Drop]) ++
+            headOps._2.drop(opsAtWrite._2.size)
+              .map(Right(_): Either[Rename, Drop])).sortBy(opSeq)
+          val rewritten = applySchemaOps(
+            spark.read.option("mergeSchema", "true")
+              .parquet(batchFiles.map(p => s"$dir/$p"): _*), newOps)
+          val stale = batchFiles
+          batchFiles = writeBatch(rewritten, dir)
+          dropOrphanBatch(spark, dir, stale)
+          opsAtWrite = headOps
+          newEntries = null // stats/blooms must be recomputed under the new names
+        }
+        val tableStats = (head.statsCols ++ statsCols).distinct
+        val tableBlooms = (head.bloomCols ++ bloomCols).distinct
+        if (newEntries == null || entriesFor != ((tableStats, tableBlooms))) {
+          newEntries = batchEntries(spark, dir, batchFiles, tableStats,
+            tableBlooms, head.bloomFpp, bucket)
+          entriesFor = (tableStats, tableBlooms)
+        }
+        // an overwrite replaces the logical contents, so pending
+        // merge-on-read deletes die with the old entries; an append
+        // carries them (they still apply to the carried files)
+        val base = if (append) head else emptied(head)
+        val next = head.version + 1
+        val led1 = batchId.fold(head.ledger)(head.ledger.add("", _))
+        Publish(base.copy(version = next, ledger = streamKey.fold(led1)(led1.addKey),
+          statsCols = tableStats, bloomCols = tableBlooms,
+          entries = base.entries ++ newEntries.map(_.copy(seq = next))), Some(next))
       }
-      val headOps = (head.map(_.renames).getOrElse(Nil),
-        head.map(_.drops).getOrElse(Nil))
-      if (batchFiles == null) {
-        // the batch is written AFTER the first head read, so the
-        // schema-op state it was written under is EXACTLY opsAtWrite —
-        // any op observed later arrived via a lost race and triggers
-        // the rewrite below
-        batchFiles = writeBatch(df, dir)
-        opsAtWrite = headOps
-      } else if (append && opsAtWrite != headOps) {
-        // a racing writer committed a rename/drop AFTER our batch
-        // files were written: published as-is they would carry seq >
-        // the op's seq under the OLD names, so reads would surface
-        // the stale name as a null-padded extra column and MoR key
-        // mapping would silently skip these files (ADVICE r11).
-        // Rewrite the batch under the current names, then retry.
-        // (Overwrites publish with empty rename/drop lists — the
-        // caller's names are final there; no rewrite.)
-        require(headOps._1.take(opsAtWrite._1.size) == opsAtWrite._1 &&
-          headOps._2.take(opsAtWrite._2.size) == opsAtWrite._2,
-          s"commit to $dir raced a RESTORE that rewound schema history — " +
-            "retry the commit against the restored head")
-        val newOps = (headOps._1.drop(opsAtWrite._1.size)
-          .map(Left(_): Either[Rename, Drop]) ++
-          headOps._2.drop(opsAtWrite._2.size)
-            .map(Right(_): Either[Rename, Drop])).sortBy(opSeq)
-        val rewritten = applySchemaOps(
-          spark.read.option("mergeSchema", "true")
-            .parquet(batchFiles.map(p => s"$dir/$p"): _*), newOps)
-        val stale = batchFiles
-        batchFiles = writeBatch(rewritten, dir)
-        dropOrphanBatch(spark, dir, stale)
-        opsAtWrite = headOps
-        newEntries = null // stats/blooms must be recomputed under the new names
-      }
-      val tableStats = (head.map(_.statsCols).getOrElse(Nil) ++ statsCols).distinct
-      val tableBlooms = (head.map(_.bloomCols).getOrElse(Nil) ++ bloomCols).distinct
-      val fpp = head.map(_.bloomFpp).getOrElse(0.01)
-      if (newEntries == null || entriesFor != ((tableStats, tableBlooms))) {
-        newEntries = batchEntries(spark, dir, batchFiles, tableStats,
-          tableBlooms, fpp, bucket)
-        entriesFor = (tableStats, tableBlooms)
-      }
-      val carried = if (append) head.map(_.entries).getOrElse(Nil) else Nil
-      // an overwrite replaces the logical contents, so pending
-      // merge-on-read deletes die with the old entries; an append
-      // carries them (they still apply to the carried files)
-      val dels = if (append) head.map(_.deletes).getOrElse(Nil) else Nil
-      val next = head.map(_.version).getOrElse(0L) + 1
-      val led1 = batchId.fold(headLed)(headLed.add("", _))
-      val led = streamKey.fold(led1)(led1.addKey)
-      testRaceHook()
-      if (tryPublish(spark, dir, Manifest(next, led, tableStats,
-        carried ++ newEntries.map(_.copy(seq = next)),
-        bloomCols = tableBlooms, bloomFpp = fpp,
-        deletes = dels,
-        renames = if (append) head.map(_.renames).getOrElse(Nil) else Nil,
-        drops = if (append) head.map(_.drops).getOrElse(Nil) else Nil,
-        adds = if (append) head.map(_.adds).getOrElse(Nil) else Nil),
-        carry = if (append) head.map(_.segments).getOrElse(Nil) else Nil))
-        return Some(next)
     }
-    None // unreachable
   }
 
   /** OPTIMIZE: rewrite the head's file set into ceil(bytes / target)
@@ -2190,28 +2239,17 @@ object SnapshotTable {
     */
   def restore(spark: SparkSession, dir: String, v: Long): Long = {
     val target = readManifest(spark, dir, v) // throws if absent
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"restore on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).last
-      val head = readManifest(spark, dir, headV)
-      if (tryPublish(spark, dir,
-        // stats/bloom declarations revert WITH the target: they name
-        // columns under the target's rename/drop state, and keeping
-        // the head's would leave future commits recording stats under
-        // names the restored schema may not carry. The LEDGER stays
-        // the head's — batch ids are monotone facts, not schema.
-        Manifest(headV + 1, head.ledger, target.statsCols, target.entries,
-          bloomCols = target.bloomCols, bloomFpp = target.bloomFpp,
-          deletes = target.deletes,
-          renames = target.renames, drops = target.drops, adds = target.adds),
-        // the restore is a metadata-only commit: the target's own
-        // segments carry by name, zero entry bytes rewritten
-        carry = target.segments))
-        return headV + 1
+    transact(spark, dir, "restore") { head =>
+      // stats/bloom declarations revert WITH the target: they name
+      // columns under the target's rename/drop state, and keeping
+      // the head's would leave future commits recording stats under
+      // names the restored schema may not carry. The LEDGER stays
+      // the head's — batch ids are monotone facts, not schema.
+      // The restore is a metadata-only commit: the target's own
+      // segments carry by name, zero entry bytes rewritten
+      Publish(target.copy(version = head.version + 1, ledger = head.ledger),
+        head.version + 1)
     }
-    -1L // unreachable
   }
 
   /** RENAME a column — METADATA-ONLY schema evolution beyond the
@@ -2233,30 +2271,19 @@ object SnapshotTable {
   def commitRenameColumn(
       spark: SparkSession, dir: String, from: String, to: String): Long = {
     require(from != to, "commitRenameColumn needs distinct names")
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"rename on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "rename") { m =>
       val cols = entriesFrame(spark, dir, m, m.entries).columns.toSet
       require(cols.contains(from),
         s"commitRenameColumn: no column '$from' in the logical schema of $dir")
       require(!cols.contains(to),
         s"commitRenameColumn: '$to' already exists in $dir — renames never shadow")
-      val next = headV + 1
+      val next = m.version + 1
       def follow(c: String) = if (c == from) to else c
-      if (tryPublish(spark, dir,
-        Manifest(next, m.ledger, m.statsCols.map(follow), m.entries,
-          bloomCols = m.bloomCols.map(follow), bloomFpp = m.bloomFpp,
-          deletes = m.deletes,
-          renames = m.renames :+ Rename(from, to, next),
-          drops = m.drops, adds = m.adds),
-        carry = m.segments)) // metadata-only: every segment carries
-        return next
+      // metadata-only: every segment carries
+      Publish(m.copy(version = next, statsCols = m.statsCols.map(follow),
+        bloomCols = m.bloomCols.map(follow),
+        renames = m.renames :+ Rename(from, to, next)), next)
     }
-    -1L // unreachable
   }
 
   /** DROP a column — the erasure half of schema evolution, also
@@ -2271,14 +2298,8 @@ object SnapshotTable {
     * the column (the delete would silently stop applying — apply the
     * deletes first) and when the column is absent. Returns the
     * committed version. */
-  def commitDropColumn(spark: SparkSession, dir: String, name: String): Long = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"drop on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+  def commitDropColumn(spark: SparkSession, dir: String, name: String): Long =
+    transact(spark, dir, "drop") { m =>
       require(entriesFrame(spark, dir, m, m.entries).columns.contains(name),
         s"commitDropColumn: no column '$name' in the logical schema of $dir")
       m.deletes.foreach { d =>
@@ -2286,18 +2307,12 @@ object SnapshotTable {
           s"commitDropColumn: a pending merge-on-read delete keys on '$name' — " +
             "run applyDeletes first, or the retraction would silently stop applying")
       }
-      val next = headV + 1
-      if (tryPublish(spark, dir,
-        Manifest(next, m.ledger, m.statsCols.filterNot(_ == name), m.entries,
-          bloomCols = m.bloomCols.filterNot(_ == name), bloomFpp = m.bloomFpp,
-          deletes = m.deletes,
-          renames = m.renames, drops = m.drops :+ Drop(name, next),
-          adds = m.adds),
-        carry = m.segments)) // metadata-only: every segment carries
-        return next
+      val next = m.version + 1
+      // metadata-only: every segment carries
+      Publish(m.copy(version = next, statsCols = m.statsCols.filterNot(_ == name),
+        bloomCols = m.bloomCols.filterNot(_ == name),
+        drops = m.drops :+ Drop(name, next)), next)
     }
-    -1L // unreachable
-  }
 
   /** ADD a column (`ALTER TABLE … ADD COLUMN`) — the widening half of
     * schema evolution, METADATA-ONLY and seq-scoped like rename/drop:
@@ -2309,31 +2324,19 @@ object SnapshotTable {
     * schema. Refused when the name is already in the logical schema —
     * including a live prior add. Returns the committed version. */
   def commitAddColumn(
-      spark: SparkSession, dir: String, name: String, dt: DataType): Long = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"add-column on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+      spark: SparkSession, dir: String, name: String, dt: DataType): Long =
+    transact(spark, dir, "add-column") { m =>
       val cols: Set[String] =
         (if (m.entries.nonEmpty)
           entriesFrame(spark, dir, m, m.entries).columns.toSet
         else Set.empty) ++ liveAdds(m).map(_._1)
       require(!cols.contains(name),
         s"commitAddColumn: '$name' already exists in $dir")
-      val next = headV + 1
-      if (tryPublish(spark, dir,
-        Manifest(next, m.ledger, m.statsCols, m.entries,
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes, renames = m.renames, drops = m.drops,
-          adds = m.adds :+ AddCol(name, dt.json, next)),
-        carry = m.segments)) // metadata-only: every segment carries
-        return next
+      val next = m.version + 1
+      // metadata-only: every segment carries
+      Publish(m.copy(version = next, adds = m.adds :+ AddCol(name, dt.json, next)),
+        next)
     }
-    -1L // unreachable
-  }
 
   /** DESCRIBE HISTORY — one row per committed version, answered from
     * the MANIFESTS alone (zero data I/O): file-census deltas
@@ -2544,9 +2547,16 @@ object SnapshotTable {
       versionsDropped = dropped)
   }
 
-  /** Garbage-collect ORPHANS: parquet files under batch-* and
-    * delete-* dirs that NO manifest references — crashed writers and lost
-    * races whose own cleanup died. Vacuum ages out manifest HISTORY;
+  /** The dirs writers stage data files in before a commit names them:
+    * `batch-` (commits), `delete-` (MoR key files, delete vectors),
+    * `dml-`/`dyn-` (the DSv2 row-level and dynamic-overwrite writers),
+    * `sink-` (streaming sink epochs). */
+  private def isStagingDir(name: String): Boolean =
+    Seq("batch-", "delete-", "dml-", "dyn-", "sink-").exists(name.startsWith)
+
+  /** Garbage-collect ORPHANS: parquet files under the staging dirs
+    * ([[isStagingDir]]) that NO manifest references — crashed writers
+    * and lost races whose own cleanup died. Vacuum ages out manifest HISTORY;
     * this sweeps what never made it into a manifest at all (the real
     * formats' "remove orphan files" maintenance action). `graceMs`
     * guards in-flight writers: a file younger than the grace is
@@ -2577,9 +2587,7 @@ object SnapshotTable {
           n += 1
         }
     f.listStatus(new Path(dir)).toSeq
-      .filter(s => s.isDirectory &&
-        (s.getPath.getName.startsWith("batch-") ||
-          s.getPath.getName.startsWith("delete-")))
+      .filter(s => s.isDirectory && isStagingDir(s.getPath.getName))
       .foreach { d =>
         f.listStatus(d.getPath).toSeq
           .filter(_.getPath.getName.endsWith(".parquet"))
@@ -2767,37 +2775,28 @@ object SnapshotTable {
       smallBytes: Long, targetBytes: Long): Long = {
     require(smallBytes > 0 && targetBytes > 0)
     val f = fs(spark, dir)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"compactSmallFiles on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "compactSmallFiles") { m =>
       val sized = sizedEntries(spark, dir, m, f)
       val (small, large) = sized.partition(_._2 < smallBytes)
-      if (small.size <= 1) return headV
-      val bytes = small.map(_._2).sum
-      val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      // the compacted output is the small files' LOGICAL rows: pending
-      // merge-on-read deletes are folded in here (the rewrite carries
-      // a fresh seq, past which they no longer apply), while the
-      // manifest keeps the delete list for the carried large files
-      val compacted = entriesFrame(spark, dir, m, small.map(_._1)).coalesce(n)
-      val batchFiles = writeBatch(compacted, dir)
-      val newEntries = batchEntries(spark, dir, batchFiles, m.statsCols,
-        m.bloomCols, m.bloomFpp)
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols,
-          large.map(_._1) ++ newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes,
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments)) // all-large segments carry by name
-        return headV + 1
-      dropOrphanBatch(spark, dir, batchFiles)
+      if (small.size <= 1) Done(m.version)
+      else {
+        val bytes = small.map(_._2).sum
+        val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+        // the compacted output is the small files' LOGICAL rows: pending
+        // merge-on-read deletes are folded in here (the rewrite carries
+        // a fresh seq, past which they no longer apply), while the
+        // manifest keeps the delete list for the carried large files
+        val compacted = entriesFrame(spark, dir, m, small.map(_._1)).coalesce(n)
+        val batchFiles = writeBatch(compacted, dir)
+        val newEntries = batchEntries(spark, dir, batchFiles, m.statsCols,
+          m.bloomCols, m.bloomFpp)
+        val next = m.version + 1
+        // all-large segments carry by name
+        Publish(m.copy(version = next,
+          entries = large.map(_._1) ++ newEntries.map(_.copy(seq = next))),
+          next, batchFiles)
+      }
     }
-    -1L // unreachable
   }
 
   /** A Column predicate as a manifest-classifiable [[DmlPred]]:
@@ -2886,41 +2885,29 @@ object SnapshotTable {
           "literals (casts, functions, and subqueries cannot prove " +
           "file coverage from stats)"))
     val f = fs(spark, dir)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20,
-        s"compactWhere on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "compactWhere") { m =>
       val scoped = m.entries.filter(e =>
         classifyEntry(m, e, p).contains(true))
       val sized = scoped.map(e =>
         e -> (if (e.bytes >= 0L) e.bytes
               else f.getFileStatus(new Path(resolve(dir, e.path))).getLen))
       val small = sized.filter(_._2 < smallBytes)
-      if (small.size <= 1) return (headV, 0)
-      val bytes = small.map(_._2).sum
-      val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      val compacted = entriesFrame(spark, dir, m, small.map(_._1)).coalesce(n)
-      val batchFiles = writeBatch(compacted, dir)
-      val newEntries = batchEntries(spark, dir, batchFiles, m.statsCols,
-        m.bloomCols, m.bloomFpp)
-      val untouched = m.entries.filterNot(e =>
-        small.exists(_._1.path == e.path))
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols,
-          untouched ++ newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes,
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return (headV + 1, small.size)
-      dropOrphanBatch(spark, dir, batchFiles)
+      if (small.size <= 1) Done((m.version, 0))
+      else {
+        val bytes = small.map(_._2).sum
+        val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+        val compacted = entriesFrame(spark, dir, m, small.map(_._1)).coalesce(n)
+        val batchFiles = writeBatch(compacted, dir)
+        val newEntries = batchEntries(spark, dir, batchFiles, m.statsCols,
+          m.bloomCols, m.bloomFpp)
+        val untouched = m.entries.filterNot(e =>
+          small.exists(_._1.path == e.path))
+        val next = m.version + 1
+        Publish(m.copy(version = next,
+          entries = untouched ++ newEntries.map(_.copy(seq = next))),
+          (next, small.size), batchFiles)
+      }
     }
-    (-1L, 0) // unreachable
   }
 
   /** BUCKET-AWARE small-file compaction: merge small files WITHIN
@@ -2969,58 +2956,45 @@ object SnapshotTable {
       if (readManifest(spark, dir, v).deletes.nonEmpty)
         applyDeletes(spark, dir): Unit
     }
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20,
-        s"compactBucketsSmallFiles on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
-      def bucketOf(e: Entry): Option[Long] = e.stats.get(key).flatMap { s =>
-        (s.min, s.max) match {
-          case (mn: java.math.BigDecimal, mx: java.math.BigDecimal)
-            if mn.compareTo(mx) == 0 && s.nulls == 0L =>
-            Some(mn.longValueExact())
-          case _ => None
-        }
+    def bucketOf(e: Entry): Option[Long] = e.stats.get(key).flatMap { s =>
+      (s.min, s.max) match {
+        case (mn: java.math.BigDecimal, mx: java.math.BigDecimal)
+          if mn.compareTo(mx) == 0 && s.nulls == 0L =>
+          Some(mn.longValueExact())
+        case _ => None
       }
+    }
+    transact(spark, dir, "compactBucketsSmallFiles") { m =>
       val sized = sizedEntries(spark, dir, m, f)
       val groups = sized
         .filter { case (e, len) => e.rows != 0L && len < smallBytes }
         .flatMap { case (e, len) => bucketOf(e).map(v => (v, e, len)) }
         .groupBy(_._1).filter(_._2.size >= 2)
-      if (groups.isEmpty) return headV
-      val rewritten = groups.values.flatten.map(_._2.path).toSet
-      val results = groups.toSeq.sortBy(_._1).map { case (_, es) =>
-        val bytes = es.map(_._3).sum
-        val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-        val batchFiles = writeBatch(
-          entriesFrame(spark, dir, m, es.map(_._2)).coalesce(nOut), dir)
-        batchFiles -> batchEntries(spark, dir, batchFiles, m.statsCols,
-          m.bloomCols, m.bloomFpp, bucket = Some(bucket))
+      if (groups.isEmpty) Done(m.version)
+      else {
+        val rewritten = groups.values.flatten.map(_._2.path).toSet
+        val results = groups.toSeq.sortBy(_._1).map { case (_, es) =>
+          val bytes = es.map(_._3).sum
+          val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+          val batchFiles = writeBatch(
+            entriesFrame(spark, dir, m, es.map(_._2)).coalesce(nOut), dir)
+          batchFiles -> batchEntries(spark, dir, batchFiles, m.statsCols,
+            m.bloomCols, m.bloomFpp, bucket = Some(bucket))
+        }
+        // a group folded empty (every row doomed between the fold above
+        // and this pass) simply DROPS from the census — a 0-row file
+        // carries no stats and names no bucket
+        val newEntries = results.flatMap(_._2).filter(_.rows != 0L)
+        require(newEntries.forall(e => bucketOf(e).isDefined),
+          s"bucket compaction on $dir produced a file without a " +
+            "single-valued __bucket stat — refusing to publish")
+        val next = m.version + 1
+        Publish(m.copy(version = next,
+          entries = m.entries.filterNot(e => rewritten.contains(e.path)) ++
+            newEntries.map(_.copy(seq = next))),
+          next, results.flatMap(_._1))
       }
-      val allBatchFiles = results.flatMap(_._1)
-      // a group folded empty (every row doomed between the fold above
-      // and this pass) simply DROPS from the census — a 0-row file
-      // carries no stats and names no bucket
-      val newEntries = results.flatMap(_._2).filter(_.rows != 0L)
-      require(newEntries.forall(e => bucketOf(e).isDefined),
-        s"bucket compaction on $dir produced a file without a " +
-          "single-valued __bucket stat — refusing to publish")
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols,
-          m.entries.filterNot(e => rewritten.contains(e.path)) ++
-            newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes,
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return headV + 1
-      dropOrphanBatch(spark, dir, allBatchFiles)
     }
-    -1L // unreachable
   }
 
   /** OPTIMIZE ZORDER: compactHead with a Morton-interleaved layout
@@ -3242,13 +3216,7 @@ object SnapshotTable {
     val spark = delta.sparkSession
     checkExpectations(delta, expectations, dir)
     val keyed = delta.select(keys.map(col): _*).distinct()
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"merge into $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "merge") { m =>
       val touched = touchedFiles(spark, dir, m, keyed, keys)
       val untouched = m.entries.filterNot(e => touched.exists(_.path == e.path))
       val rewritten =
@@ -3275,19 +3243,13 @@ object SnapshotTable {
       val batchFiles = writeBatch(rewritten, dir)
       val newEntries = batchEntries(spark, dir, batchFiles, m.statsCols,
         m.bloomCols, m.bloomFpp)
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols,
-          untouched ++ newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes,
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments)) // untouched-file segments carry by name
-        return headV + 1
-      // lost the race: our batch is orphaned (no manifest names it);
-      // drop it and recompute against the new head
-      dropOrphanBatch(spark, dir, batchFiles)
+      val next = m.version + 1
+      // untouched-file segments carry by name; a lost race orphans the
+      // batch and recomputes the touched set against the new head
+      Publish(m.copy(version = next,
+        entries = untouched ++ newEntries.map(_.copy(seq = next))),
+        next, batchFiles)
     }
-    -1L // unreachable
   }
 
   /** DELETE by key: drop the head rows whose key appears in `keys`
@@ -3302,24 +3264,13 @@ object SnapshotTable {
   def commitDelete(keys: DataFrame, dir: String, keyCols: Seq[String]): Long = {
     val spark = keys.sparkSession
     val keyed = keys.select(keyCols.map(col): _*).distinct()
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"delete from $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "delete") { m =>
+      val next = m.version + 1
       val touched = touchedFiles(spark, dir, m, keyed, keyCols)
       if (touched.isEmpty) {
         // nothing holds a doomed key: the delete is a metadata-only
         // no-op commit (every entry carried forward)
-        if (tryPublish(spark, dir,
-          Manifest(headV + 1, m.ledger, m.statsCols, m.entries,
-            bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-            deletes = m.deletes,
-            renames = m.renames, drops = m.drops, adds = m.adds),
-          carry = m.segments))
-          return headV + 1
+        Publish(m.copy(version = next), next)
       } else {
         val untouched = m.entries.filterNot(e => touched.exists(_.path == e.path))
         val survivors = entriesFrame(spark, dir, m, touched)
@@ -3327,18 +3278,11 @@ object SnapshotTable {
         val batchFiles = writeBatch(survivors, dir)
         val newEntries = batchEntries(spark, dir, batchFiles, m.statsCols,
           m.bloomCols, m.bloomFpp)
-        if (tryPublish(spark, dir,
-          Manifest(headV + 1, m.ledger, m.statsCols,
-            untouched ++ newEntries.map(_.copy(seq = headV + 1)),
-            bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-            deletes = m.deletes,
-            renames = m.renames, drops = m.drops, adds = m.adds),
-          carry = m.segments))
-          return headV + 1
-        dropOrphanBatch(spark, dir, batchFiles)
+        Publish(m.copy(version = next,
+          entries = untouched ++ newEntries.map(_.copy(seq = next))),
+          next, batchFiles)
       }
     }
-    -1L // unreachable
   }
 
   // -----------------------------------------------------------------
@@ -3483,28 +3427,15 @@ object SnapshotTable {
     * command then re-runs). Pending MoR deletes coexist safely: a
     * dropped file's rows were all doomed by the predicate anyway. */
   private[graft] def deleteFilesWhere(
-      spark: SparkSession, dir: String, p: DmlPred): Long = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"metadata delete on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+      spark: SparkSession, dir: String, p: DmlPred): Long =
+    transact(spark, dir, "metadata delete") { m =>
       val classified = m.entries.map(e => e -> classifyEntry(m, e, p))
       require(classified.forall(_._2.isDefined),
         s"DELETE on $dir is no longer metadata-answerable (a concurrent commit " +
           "changed the file census mid-delete); re-run the DELETE")
       val keep = classified.collect { case (e, Some(false)) => e }
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols, keep,
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes, renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return headV + 1
+      Publish(m.copy(version = m.version + 1, entries = keep), m.version + 1)
     }
-    -1L // unreachable
-  }
 
   /** REPLACE WHERE — the filter-scoped atomic overwrite (the
     * lakehouse formats' replaceWhere; SQL's `INSERT INTO … REPLACE
@@ -3536,15 +3467,7 @@ object SnapshotTable {
       if (readManifest(spark, dir, v).deletes.nonEmpty)
         applyDeletes(spark, dir): Unit
     }
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20,
-        s"REPLACE WHERE on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "REPLACE WHERE") { m =>
       require(m.deletes.isEmpty,
         s"REPLACE WHERE on $dir raced a merge-on-read delete — re-run")
       val classified = m.entries.map(e =>
@@ -3564,16 +3487,11 @@ object SnapshotTable {
       val tableBlooms = (m.bloomCols ++ bloomCols).distinct
       val newEntries = batchEntries(spark, dir, batchFiles, tableStats,
         tableBlooms, m.bloomFpp, bucket)
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, tableStats,
-          kept ++ newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = tableBlooms, bloomFpp = m.bloomFpp,
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return headV + 1
-      dropOrphanBatch(spark, dir, batchFiles)
+      val next = m.version + 1
+      Publish(m.copy(version = next, statsCols = tableStats, bloomCols = tableBlooms,
+        entries = kept ++ newEntries.map(_.copy(seq = next))),
+        next, batchFiles)
     }
-    -1L // unreachable
   }
 
   /** DYNAMIC PARTITION OVERWRITE's commit half: replace exactly the
@@ -3598,15 +3516,7 @@ object SnapshotTable {
       if (readManifest(spark, dir, v).deletes.nonEmpty)
         applyDeletes(spark, dir): Unit
     }
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20,
-        s"dynamic overwrite on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "dynamic overwrite") { m =>
       require(m.deletes.isEmpty,
         s"dynamic overwrite on $dir raced a merge-on-read delete — re-run")
       val classified = m.entries.map(e =>
@@ -3621,16 +3531,13 @@ object SnapshotTable {
       val tableBlooms = (m.bloomCols ++ bloomCols).distinct
       val newEntries = batchEntries(spark, dir, survivorFiles ++ newFiles,
         tableStats, tableBlooms, m.bloomFpp, bucket)
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, tableStats,
-          kept ++ newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = tableBlooms, bloomFpp = m.bloomFpp,
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return headV + 1
-      dropOrphanBatch(spark, dir, survivorFiles)
+      val next = m.version + 1
+      // the caller's newFiles are reused by the retry; only the
+      // rewritten survivors are this attempt's own
+      Publish(m.copy(version = next, statsCols = tableStats, bloomCols = tableBlooms,
+        entries = kept ++ newEntries.map(_.copy(seq = next))),
+        next, survivorFiles)
     }
-    -1L // unreachable
   }
 
   /** The SQL row-level copy-on-write commit (DSv2 ReplaceData):
@@ -3645,36 +3552,31 @@ object SnapshotTable {
   private[graft] def commitReplaceFiles(
       spark: SparkSession, dir: String, basedOn: Long,
       replaced: Set[String], newFiles: Seq[String],
-      bucket: Option[(String, Int)] = None): Long = {
-    val headV = versions(spark, dir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-    require(headV == basedOn,
-      s"concurrent commit on $dir during SQL DML (scanned v$basedOn, head is " +
-        s"v$headV): aborting — re-run the command against the new head")
-    val m = readManifest(spark, dir, headV)
-    require(m.deletes.isEmpty,
-      s"SQL DML on $dir with merge-on-read deletes pending — fold them first " +
-        "(SnapshotTable.applyDeletes or maintainTable)")
-    val missing = replaced.filterNot(r => m.entries.exists(_.path == r))
-    require(missing.isEmpty,
-      s"SQL DML on $dir would replace files no longer live: ${missing.mkString(", ")}")
-    val untouched = m.entries.filterNot(e => replaced.contains(e.path))
-    // `bucket` = the table's declared layout when the DML write landed
-    // its replacement files bucket-clustered (the write requested
-    // hash(col)%n distribution): record the __bucket stat per new file
-    // so storage-partitioned joins stay armed THROUGH DELETE/UPDATE/
-    // MERGE instead of downgrading until a manual CALL rebucket
-    val newEntries = batchEntries(spark, dir, newFiles, m.statsCols,
-      m.bloomCols, m.bloomFpp, bucket = bucket)
-    require(tryPublish(spark, dir,
-      Manifest(headV + 1, m.ledger, m.statsCols,
-        untouched ++ newEntries.map(_.copy(seq = headV + 1)),
-        bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-        deletes = m.deletes, renames = m.renames, drops = m.drops, adds = m.adds),
-      carry = m.segments),
-      s"concurrent commit on $dir during SQL DML publish: aborting — re-run")
-    headV + 1
-  }
+      bucket: Option[(String, Int)] = None): Long =
+    // no retry: a lost publish race re-reads a head that is no longer
+    // `basedOn`, so the re-validation below aborts the command
+    transact(spark, dir, "SQL DML") { m =>
+      require(m.version == basedOn,
+        s"concurrent commit on $dir during SQL DML (scanned v$basedOn, head is " +
+          s"v${m.version}): aborting — re-run the command against the new head")
+      require(m.deletes.isEmpty,
+        s"SQL DML on $dir with merge-on-read deletes pending — fold them first " +
+          "(SnapshotTable.applyDeletes or maintainTable)")
+      val missing = replaced.filterNot(r => m.entries.exists(_.path == r))
+      require(missing.isEmpty,
+        s"SQL DML on $dir would replace files no longer live: ${missing.mkString(", ")}")
+      val untouched = m.entries.filterNot(e => replaced.contains(e.path))
+      // `bucket` = the table's declared layout when the DML write landed
+      // its replacement files bucket-clustered (the write requested
+      // hash(col)%n distribution): record the __bucket stat per new file
+      // so storage-partitioned joins stay armed THROUGH DELETE/UPDATE/
+      // MERGE instead of downgrading until a manual CALL rebucket
+      val newEntries = batchEntries(spark, dir, newFiles, m.statsCols,
+        m.bloomCols, m.bloomFpp, bucket = bucket)
+      val next = m.version + 1
+      Publish(m.copy(version = next,
+        entries = untouched ++ newEntries.map(_.copy(seq = next))), next)
+    }
 
   /** The streaming-SINK commit (DSv2 `writeStream.format(
     * "graft-snapshot")`): pre-written batch files land as ONE ledgered
@@ -3703,50 +3605,34 @@ object SnapshotTable {
       overwrite: Boolean = false): Option[Long] = {
     require(appId.nonEmpty && !appId.contains(":"),
       s"appId must be non-empty without ':' — got '$appId'")
-    var attempts = 0
     var opsAtFirstRead: (Seq[Rename], Seq[Drop]) = null
     var newEntries: Seq[Entry] = null
-    while (true) {
-      attempts += 1
-      require(attempts <= 20,
-        s"streaming sink commit on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(0L)
-      val m =
-        if (headV == 0L) Manifest(0L, Ledger(), statsCols, Nil,
-          bloomCols = bloomCols)
-        else readManifest(spark, dir, headV)
+    transact(spark, dir, "streaming sink commit", create = true) { m =>
       if (m.ledger.contains(appId, batchId)) {
         if (relPaths.nonEmpty) dropOrphanBatch(spark, dir, relPaths)
-        return None
+        Done(None)
+      } else {
+        if (opsAtFirstRead == null) opsAtFirstRead = (m.renames, m.drops)
+        else require((m.renames, m.drops) == opsAtFirstRead,
+          s"streaming sink commit on $dir raced a schema evolution — the " +
+            "batch files carry pre-evolution names; restart the query")
+        // sticky-union like commitBatch: a caller-declared stat/bloom
+        // column (the sink's TBLPROPERTIES/options) joins the table's
+        // standing declarations even when the table already exists —
+        // without this a SQL-created table's sink commits would never
+        // record the stats its write-path config asks for
+        val tableStats = (m.statsCols ++ statsCols).distinct
+        val tableBlooms = (m.bloomCols ++ bloomCols).distinct
+        if (newEntries == null)
+          newEntries = batchEntries(spark, dir, relPaths, tableStats,
+            tableBlooms, m.bloomFpp)
+        val base = if (overwrite) emptied(m) else m
+        val next = m.version + 1
+        Publish(base.copy(version = next, ledger = m.ledger.add(appId, batchId),
+          statsCols = tableStats, bloomCols = tableBlooms,
+          entries = base.entries ++ newEntries.map(_.copy(seq = next))), Some(next))
       }
-      if (opsAtFirstRead == null) opsAtFirstRead = (m.renames, m.drops)
-      else require((m.renames, m.drops) == opsAtFirstRead,
-        s"streaming sink commit on $dir raced a schema evolution — the " +
-          "batch files carry pre-evolution names; restart the query")
-      // sticky-union like commitBatch: a caller-declared stat/bloom
-      // column (the sink's TBLPROPERTIES/options) joins the table's
-      // standing declarations even when the table already exists —
-      // without this a SQL-created table's sink commits would never
-      // record the stats its write-path config asks for
-      val tableStats = (m.statsCols ++ statsCols).distinct
-      val tableBlooms = (m.bloomCols ++ bloomCols).distinct
-      if (newEntries == null)
-        newEntries = batchEntries(spark, dir, relPaths, tableStats,
-          tableBlooms, m.bloomFpp)
-      testRaceHook()
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger.add(appId, batchId), tableStats,
-          (if (overwrite) Nil else m.entries) ++
-            newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = tableBlooms, bloomFpp = m.bloomFpp,
-          deletes = if (overwrite) Nil else m.deletes,
-          renames = if (overwrite) Nil else m.renames,
-          drops = if (overwrite) Nil else m.drops,
-          adds = if (overwrite) Nil else m.adds),
-        carry = if (overwrite) Nil else m.segments))
-        return Some(headV + 1)
     }
-    None // unreachable
   }
 
   /** DELETE by key, MERGE-ON-READ: commit only a delta-sized key file
@@ -3817,79 +3703,67 @@ object SnapshotTable {
     var curCols: Seq[String] = keyCols // the names the key FILES carry
     var opsAtWrite: (Seq[Rename], Seq[Drop]) = null
     var nKeys = -1L
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"MoR delete on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "MoR delete") { m =>
       if (streamKey.exists(m.ledger.containsKey)) {
         if (paths != null) dropOrphanBatch(spark, dir, paths)
-        return None
-      }
-      val headOps = (m.renames, m.drops)
-      if (paths == null) {
-        // key files written AFTER the first head read: opsAtWrite is
-        // exactly the schema-op state their column names reflect.
-        // The key census rides the write action as an observed metric
-        // (guide §1/§2.3: one pass, not a write plus a re-read count)
-        val obs = new org.apache.spark.sql.Observation()
-        paths = writeKeys(keys.select(keyCols.map(col): _*).distinct()
-          .observe(obs, count(lit(1)).as("__graft_nkeys")))
-        opsAtWrite = headOps
-        nKeys = obs.get("__graft_nkeys").asInstanceOf[Long]
-      } else if (opsAtWrite != headOps) {
-        // a racing writer committed a rename/drop after our key files
-        // were written: recorded as-is, the delete's keyCols would
-        // carry PRE-op names with seq AFTER the op, so currentName
-        // never maps them and the retraction silently stops applying
-        // (ADVICE r11 — the GDPR path). Remap key files/columns under
-        // the current names; a concurrent DROP of a key column is
-        // unrecordable and fails loudly.
-        require(headOps._1.take(opsAtWrite._1.size) == opsAtWrite._1 &&
-          headOps._2.take(opsAtWrite._2.size) == opsAtWrite._2,
-          s"MoR delete on $dir raced a RESTORE that rewound schema history — " +
-            "retry the delete against the restored head")
-        val newOps = (headOps._1.drop(opsAtWrite._1.size)
-          .map(Left(_): Either[Rename, Drop]) ++
-          headOps._2.drop(opsAtWrite._2.size)
-            .map(Right(_): Either[Rename, Drop])).sortBy(opSeq)
-        val mapped = curCols.map { c0 =>
-          newOps.foldLeft(c0) {
-            case (n, Left(r)) => if (r.from == n) r.to else n
-            case (n, Right(d)) =>
-              require(d.name != n,
-                s"MoR delete on $dir raced a DROP of key column '$n' — the " +
-                  "retraction cannot be recorded against a dropped column")
-              n
-          }
-        }
-        if (mapped != curCols) {
-          val kf = curCols.zip(mapped)
-            .foldLeft(spark.read.parquet(paths.map(p => s"$dir/$p"): _*)) {
-              case (df, (o, n)) =>
-                if (o == n) df else df.withColumnRenamed(o, n)
+        Done(None)
+      } else {
+        val headOps = (m.renames, m.drops)
+        if (paths == null) {
+          // key files written AFTER the first head read: opsAtWrite is
+          // exactly the schema-op state their column names reflect.
+          // The key census rides the write action as an observed metric
+          // (guide §1/§2.3: one pass, not a write plus a re-read count)
+          val obs = new org.apache.spark.sql.Observation()
+          paths = writeKeys(keys.select(keyCols.map(col): _*).distinct()
+            .observe(obs, count(lit(1)).as("__graft_nkeys")))
+          opsAtWrite = headOps
+          nKeys = obs.get("__graft_nkeys").asInstanceOf[Long]
+        } else if (opsAtWrite != headOps) {
+          // a racing writer committed a rename/drop after our key files
+          // were written: recorded as-is, the delete's keyCols would
+          // carry PRE-op names with seq AFTER the op, so currentName
+          // never maps them and the retraction silently stops applying
+          // (ADVICE r11 — the GDPR path). Remap key files/columns under
+          // the current names; a concurrent DROP of a key column is
+          // unrecordable and fails loudly.
+          require(headOps._1.take(opsAtWrite._1.size) == opsAtWrite._1 &&
+            headOps._2.take(opsAtWrite._2.size) == opsAtWrite._2,
+            s"MoR delete on $dir raced a RESTORE that rewound schema history — " +
+              "retry the delete against the restored head")
+          val newOps = (headOps._1.drop(opsAtWrite._1.size)
+            .map(Left(_): Either[Rename, Drop]) ++
+            headOps._2.drop(opsAtWrite._2.size)
+              .map(Right(_): Either[Rename, Drop])).sortBy(opSeq)
+          val mapped = curCols.map { c0 =>
+            newOps.foldLeft(c0) {
+              case (n, Left(r)) => if (r.from == n) r.to else n
+              case (n, Right(d)) =>
+                require(d.name != n,
+                  s"MoR delete on $dir raced a DROP of key column '$n' — the " +
+                    "retraction cannot be recorded against a dropped column")
+                n
             }
-          val stale = paths
-          paths = writeKeys(kf)
-          dropOrphanBatch(spark, dir, stale)
-          curCols = mapped
+          }
+          if (mapped != curCols) {
+            val kf = curCols.zip(mapped)
+              .foldLeft(spark.read.parquet(paths.map(p => s"$dir/$p"): _*)) {
+                case (df, (o, n)) =>
+                  if (o == n) df else df.withColumnRenamed(o, n)
+              }
+            val stale = paths
+            paths = writeKeys(kf)
+            dropOrphanBatch(spark, dir, stale)
+            curCols = mapped
+          }
+          opsAtWrite = headOps
         }
-        opsAtWrite = headOps
+        val next = m.version + 1
+        // zero data files touched: all segments carry
+        Publish(m.copy(version = next, ledger = streamKey.fold(m.ledger)(m.ledger.addKey),
+          deletes = m.deletes :+ DeleteFile(paths, curCols, next, nKeys)), Some(next))
       }
-      val next = headV + 1
-      testRaceHook()
-      if (tryPublish(spark, dir,
-        Manifest(next,
-          streamKey.fold(m.ledger)(m.ledger.addKey), m.statsCols, m.entries,
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes :+ DeleteFile(paths, curCols, next, nKeys),
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments)) // zero data files touched: all carry
-        return Some(next)
     }
-    None // unreachable
   }
 
   /** Streaming UPSERT, merge-on-read: the micro-batch's rows APPEND
@@ -3977,82 +3851,74 @@ object SnapshotTable {
     checkExpectations(batch, expectations, dir)
     var batchFiles: Seq[String] = null
     var newEntries: Seq[Entry] = null
+    var nRows = -1L
     var nKeys = -1L
     var opsAtWrite: (Seq[Rename], Seq[Drop]) = null
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"stream upsert on $dir lost 20 straight races; giving up")
-      // first epoch CREATES the table (a streaming sink's contract):
-      // v1 is a plain ledgered append — no prior files, no delete
-      val headV = versions(spark, dir).lastOption.getOrElse(0L)
-      val m =
-        if (headV == 0L) Manifest(0L, Ledger(), Seq.empty, Seq.empty)
-        else readManifest(spark, dir, headV)
+    // first epoch CREATES the table (a streaming sink's contract):
+    // v1 is a plain ledgered append — no prior files, no delete
+    transact(spark, dir, "stream upsert", create = true) { m =>
       if (streamKey.exists(m.ledger.containsKey)) {
         if (batchFiles != null) dropOrphanBatch(spark, dir, batchFiles)
         else preStaged.foreach(dropOrphanBatch(spark, dir, _))
-        return None
-      }
-      val headOps = (m.renames, m.drops)
-      if (batchFiles == null) {
-        val tableStats = (m.statsCols ++ statsCols).distinct
-        val tableBlooms = (m.bloomCols ++ bloomCols).distinct
-        batchFiles = preStaged.getOrElse(writeBatch(batch, dir))
-        newEntries = batchEntries(spark, dir, batchFiles, tableStats,
-          tableBlooms, m.bloomFpp)
-        // the row census is the entries' footer counts — no aggregate
-        // job; a zero-row epoch must not leave its empty files behind
-        val nRows = newEntries.map(_.rows).sum
+        Done(None)
+      } else {
+        val headOps = (m.renames, m.drops)
+        if (batchFiles == null) {
+          val tableStats = (m.statsCols ++ statsCols).distinct
+          val tableBlooms = (m.bloomCols ++ bloomCols).distinct
+          batchFiles = preStaged.getOrElse(writeBatch(batch, dir))
+          newEntries = batchEntries(spark, dir, batchFiles, tableStats,
+            tableBlooms, m.bloomFpp)
+          // the row census is the entries' footer counts — no aggregate
+          // job; a zero-row epoch must not leave its empty files behind
+          nRows = newEntries.map(_.rows).sum
+          if (nRows > 0L) {
+            // the epoch's own committed files ARE the delete's key frame:
+            // one image per key (checked right here) means their key
+            // columns hold exactly the doomed keys, and every reader of a
+            // delete's paths already column-prunes to keyCols and
+            // distincts — so a second key-only write would duplicate both
+            // the I/O and the storage and double the epoch's file count
+            // for nothing. Sequence scoping keeps it sound: the delete
+            // (seq = next) applies only to entries with seq < next, never
+            // to the files it names. The uniqueness census is one
+            // column-pruned aggregate over the just-written files
+            // (count_distinct of the key STRUCT matches distinct().count()
+            // bit-for-bit — a struct with null fields is itself non-null,
+            // so null keys count exactly as row-distinct did).
+            nKeys = spark.read.parquet(batchFiles.map(p => resolve(dir, p)): _*)
+              .agg(count_distinct(struct(keyCols.map(col): _*)).as("k"))
+              .head().getLong(0)
+            if (nRows != nKeys) {
+              // contract violation must not leave this call's files behind
+              if (preStaged.isEmpty) dropOrphanBatch(spark, dir, batchFiles)
+              require(nRows == nKeys,
+                s"stream upsert on $dir: the batch carries $nRows rows over " +
+                  s"$nKeys distinct keys ${keyCols.mkString("(", ",", ")")} — " +
+                  "an upsert needs ONE image per key; dedupe the batch " +
+                  "(latest-wins is the caller's call, not the table's)")
+            }
+          }
+          opsAtWrite = headOps
+        } else require(opsAtWrite == headOps,
+          s"stream upsert on $dir raced a column rename/drop — re-run the " +
+            "epoch (exactly-once makes the retry safe)")
         if (nRows == 0L) {
           dropOrphanBatch(spark, dir, batchFiles)
-          return None
+          Done(None)
+        } else {
+          val next = m.version + 1
+          Publish(m.copy(version = next, ledger = streamKey.fold(m.ledger)(m.ledger.addKey),
+            statsCols = (m.statsCols ++ statsCols).distinct,
+            bloomCols = (m.bloomCols ++ bloomCols).distinct,
+            entries = m.entries ++ newEntries.map(_.copy(seq = next)),
+            deletes =
+              if (m.entries.isEmpty) m.deletes // no prior files to doom
+              else m.deletes :+ DeleteFile(batchFiles, keyCols, next, nKeys)),
+            Some(next))
         }
-        // the epoch's own committed files ARE the delete's key frame:
-        // one image per key (checked right here) means their key
-        // columns hold exactly the doomed keys, and every reader of a
-        // delete's paths already column-prunes to keyCols and
-        // distincts — so a second key-only write would duplicate both
-        // the I/O and the storage and double the epoch's file count
-        // for nothing. Sequence scoping keeps it sound: the delete
-        // (seq = next) applies only to entries with seq < next, never
-        // to the files it names. The uniqueness census is one
-        // column-pruned aggregate over the just-written files
-        // (count_distinct of the key STRUCT matches distinct().count()
-        // bit-for-bit — a struct with null fields is itself non-null,
-        // so null keys count exactly as row-distinct did).
-        nKeys = spark.read.parquet(batchFiles.map(p => resolve(dir, p)): _*)
-          .agg(count_distinct(struct(keyCols.map(col): _*)).as("k"))
-          .head().getLong(0)
-        if (nRows != nKeys) {
-          // contract violation must not leave this call's files behind
-          if (preStaged.isEmpty) dropOrphanBatch(spark, dir, batchFiles)
-          require(nRows == nKeys,
-            s"stream upsert on $dir: the batch carries $nRows rows over " +
-              s"$nKeys distinct keys ${keyCols.mkString("(", ",", ")")} — " +
-              "an upsert needs ONE image per key; dedupe the batch " +
-              "(latest-wins is the caller's call, not the table's)")
-        }
-        opsAtWrite = headOps
-      } else require(opsAtWrite == headOps,
-        s"stream upsert on $dir raced a column rename/drop — re-run the " +
-          "epoch (exactly-once makes the retry safe)")
-      val next = headV + 1
-      testRaceHook()
-      if (tryPublish(spark, dir,
-        Manifest(next, streamKey.fold(m.ledger)(m.ledger.addKey),
-          (m.statsCols ++ statsCols).distinct,
-          m.entries ++ newEntries.map(_.copy(seq = next)),
-          bloomCols = (m.bloomCols ++ bloomCols).distinct,
-          bloomFpp = m.bloomFpp,
-          deletes =
-            if (m.entries.isEmpty) m.deletes // no prior files to doom
-            else m.deletes :+ DeleteFile(batchFiles, keyCols, next, nKeys),
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return Some(next)
+      }
     }
-    None // unreachable
   }
 
   /** DELETE by PREDICATE, merge-on-read via a POSITIONAL DELETE
@@ -4088,13 +3954,7 @@ object SnapshotTable {
     var affected: Seq[(String, Long)] = null
     var total = -1L
     var fingerprint: (Set[String], Seq[DeleteFile]) = null
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"DV delete on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "DV delete") { m =>
       // positions are location-derived, not column-derived, so a raced
       // schema op never invalidates them — only the entry set and the
       // delete list fingerprint the staged vector
@@ -4103,23 +3963,18 @@ object SnapshotTable {
         if (staged != null) dropOrphanBatch(spark, dir, staged)
         staged = null; affected = null; total = -1L
         fingerprint = fp
-        stageVector(spark, dir, m, headV, predicate, "DV delete") match {
-          case None => return headV
-          case Some((_, _, ps, aff, tot)) =>
-            staged = ps; affected = aff; total = tot
+        stageVector(spark, dir, m, m.version, predicate, "DV delete").foreach {
+          case (_, _, ps, aff, tot) => staged = ps; affected = aff; total = tot
         }
       }
-      testRaceHook()
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols, m.entries,
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-          deletes = m.deletes :+
-            DeleteFile(staged, Seq(DvPosCol), headV + 1, total, affected),
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments)) // zero data files touched: all carry
-        return headV + 1
+      if (staged == null) Done(m.version) // nothing matched: no empty commit
+      else {
+        val next = m.version + 1
+        // zero data files touched: all segments carry
+        Publish(m.copy(version = next, deletes = m.deletes :+
+          DeleteFile(staged, Seq(DvPosCol), next, total, affected)), next)
+      }
     }
-    -1L // unreachable
   }
 
   /** UPDATE by PREDICATE via a delete vector + append, as ONE commit:
@@ -4150,19 +4005,13 @@ object SnapshotTable {
     var total = -1L
     var fingerprint: (Set[String], Seq[DeleteFile],
       Seq[Rename], Seq[Drop], Seq[AddCol]) = null
-    var attempts = 0
     def dropStaged(): Unit = {
       if (staged != null) dropOrphanBatch(spark, dir, staged)
       if (stagedBatch != null) dropOrphanBatch(spark, dir, stagedBatch)
       staged = null; stagedBatch = null; newEntries = null
       affected = null; total = -1L
     }
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"DV update on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
+    transact(spark, dir, "DV update") { m =>
       // UNLIKE the pure delete, the staged image batch is
       // column-derived: a raced rename/drop/add would make images
       // written under the OLD names publish with a post-op seq, so
@@ -4175,9 +4024,8 @@ object SnapshotTable {
       if (staged == null || fingerprint != fp) {
         dropStaged()
         fingerprint = fp
-        stageVector(spark, dir, m, headV, predicate, "DV update") match {
-          case None => return headV
-          case Some((mf, pruned, ps, aff, tot)) =>
+        stageVector(spark, dir, m, m.version, predicate, "DV update").foreach {
+          case (mf, pruned, ps, aff, tot) =>
             staged = ps; affected = aff; total = tot
             val matched = entriesFrameMeta(spark, dir, mf, pruned,
               keepMeta = true).filter(predicate).drop(DvNameCol, DvPosCol)
@@ -4205,18 +4053,15 @@ object SnapshotTable {
                 s"but the vector marks $total — snapshot drifted mid-compute; re-run")
         }
       }
-      testRaceHook()
-      if (tryPublish(spark, dir,
-        Manifest(headV + 1, m.ledger, m.statsCols,
-          m.entries ++ newEntries.map(_.copy(seq = headV + 1)),
-          bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
+      if (staged == null) Done(m.version) // zero matches: no empty commit
+      else {
+        val next = m.version + 1
+        Publish(m.copy(version = next,
+          entries = m.entries ++ newEntries.map(_.copy(seq = next)),
           deletes = m.deletes :+
-            DeleteFile(staged, Seq(DvPosCol), headV + 1, total, affected),
-          renames = m.renames, drops = m.drops, adds = m.adds),
-        carry = m.segments))
-        return headV + 1
+            DeleteFile(staged, Seq(DvPosCol), next, total, affected)), next)
+      }
     }
-    -1L // unreachable
   }
 
   /** Shared staging for the vector commits: validates the
@@ -4327,26 +4172,28 @@ object SnapshotTable {
       s"cloneTable: $srcDir@$v has files still subject to a column rename/drop, " +
         "whose sequence scoping does not transplant — compact/OPTIMIZE the " +
         "source first to normalize them")
-    require(versions(spark, dstDir).isEmpty,
-      s"cloneTable target $dstDir already has a committed version")
     val f = fs(spark, dstDir)
     val srcFs = fs(spark, srcDir)
-    val ext = m.entries.map { e =>
-      val abs = resolve(srcDir, e.path)
-      // carried entries restart at seq 0: a future MoR delete on the
-      // clone (seq ≥ 2) applies to them, as it must
-      e.sidecarBloomCols.foreach { c =>
-        org.apache.hadoop.fs.FileUtil.copy(
-          srcFs, sidecarBloomPath(srcDir, e.path, c),
-          f, sidecarBloomPath(dstDir, abs, c),
-          false, spark.sparkContext.hadoopConfiguration)
+    // no retry: a lost creation race re-reads a non-empty target and
+    // the check below refuses
+    transact(spark, dstDir, "cloneTable", create = true) { head =>
+      require(head.version == 0L,
+        s"cloneTable target $dstDir already has a committed version")
+      val ext = m.entries.map { e =>
+        val abs = resolve(srcDir, e.path)
+        // carried entries restart at seq 0: a future MoR delete on the
+        // clone (seq ≥ 2) applies to them, as it must
+        e.sidecarBloomCols.foreach { c =>
+          org.apache.hadoop.fs.FileUtil.copy(
+            srcFs, sidecarBloomPath(srcDir, e.path, c),
+            f, sidecarBloomPath(dstDir, abs, c),
+            false, spark.sparkContext.hadoopConfiguration)
+        }
+        e.copy(path = abs, seq = 0L)
       }
-      e.copy(path = abs, seq = 0L)
+      Publish(Manifest(1L, Ledger(), m.statsCols, ext,
+        bloomCols = m.bloomCols, bloomFpp = m.bloomFpp), ())
     }
-    require(tryPublish(spark, dstDir,
-      Manifest(1L, Ledger(), m.statsCols, ext,
-        bloomCols = m.bloomCols, bloomFpp = m.bloomFpp)),
-      s"cloneTable lost a creation race on $dstDir")
     // provenance for publishClone: which table AND VERSION this clone
     // staged — the optimistic-concurrency pin write-audit-publish
     // validates against (one tiny json; harmless for plain forks)
@@ -4421,16 +4268,8 @@ object SnapshotTable {
     require(schemaOps(sm).forall(op => sm.entries.forall(_.seq >= opSeq(op))),
       s"publishClone: $stagingDir has files still subject to a column " +
         "rename/drop — compact/OPTIMIZE the staging table first")
-    val tvs = versions(spark, targetDir)
-    require(tvs.nonEmpty && tvs.last == provV,
-      s"publishClone: $targetDir moved to ${tvs.lastOption.getOrElse(-1L)} " +
-        s"since the clone pinned $provV — a concurrent commit landed; " +
-        "re-clone, re-stage, re-audit")
-    val tm = readManifest(spark, targetDir, tvs.last)
     val f = fs(spark, targetDir)
     val sfs = fs(spark, stagingDir)
-    val batch = s"batch-wap-${UUID.randomUUID()}"
-    f.mkdirs(new Path(s"$targetDir/$batch"))
     // crash-atomicity (ADVICE r14): staged files are COPIED into the
     // target batch dir, the manifest publishes, and only then do the
     // staging originals delete. A crash at any point leaves either
@@ -4449,49 +4288,54 @@ object SnapshotTable {
     }
     def underTarget(abs: String): Boolean =
       qualifiedPath(spark, abs).startsWith(targetCanon + "/")
-    val published =
-      try sm.entries.zipWithIndex.map { case (e, i) =>
-        val abs = resolve(stagingDir, e.path)
-        if (underTarget(abs)) {
-          // the clone's zero-copy reference back into the target tree:
-          // an ordinary relative entry again
-          e.copy(path = qualifiedPath(spark, abs).stripPrefix(targetCanon + "/"),
-            seq = 0L)
-        } else {
-          // a STAGED file: copy it (and its bloom sidecars) into the
-          // target tree — indexed name, two staged part-00000s from
-          // different batches must never collide. An external ref into
-          // a THIRD table (a clone of a clone) is not ours to move.
-          require(qualifiedPath(spark, abs)
-            .startsWith(qualifiedPath(spark, stagingDir) + "/"),
-            s"publishClone: $stagingDir references $abs, which lives in " +
-              "neither the staging nor the target tree (a clone of a " +
-              "clone?) — compact the staging table to localize it first")
-          val name = s"f$i-${new Path(abs).getName}"
-          val dst = new Path(s"$targetDir/$batch/$name")
-          e.sidecarBloomCols.foreach { c =>
-            val sideFrom = sidecarBloomPath(stagingDir, e.path, c)
-            val sideTo = sidecarBloomPath(targetDir, s"$batch/$name", c)
-            f.mkdirs(sideTo.getParent)
-            copyStaged(sideFrom, sideTo)
-          }
-          copyStaged(new Path(abs), dst)
-          e.copy(path = s"$batch/$name", seq = 0L)
-        }
-      } catch { case t: Throwable =>
-        f.delete(new Path(s"$targetDir/$batch"), true): Unit
-        throw t
-      }
-    // content fully replaces: schema-op lists clear (the staged census
-    // carries final names), target's ledger carries (its streaming
-    // writers' exactly-once state survives the publish)
-    if (!tryPublish(spark, targetDir,
-      Manifest(tvs.last + 1, tm.ledger, sm.statsCols, published,
-        bloomCols = sm.bloomCols, bloomFpp = sm.bloomFpp))) {
-      f.delete(new Path(s"$targetDir/$batch"), true): Unit
-      throw new IllegalStateException(
-        s"publishClone: a commit raced onto $targetDir during the publish — " +
+    // no retry: a lost publish race re-reads a head that is no longer
+    // the pinned version, and the check below refuses
+    val published = transact(spark, targetDir, "publishClone", create = true) { tm =>
+      require(tm.version == provV,
+        s"publishClone: $targetDir moved to ${tm.version} " +
+          s"since the clone pinned $provV — a concurrent commit landed; " +
           "re-clone, re-stage, re-audit")
+      val batch = s"batch-wap-${UUID.randomUUID()}"
+      f.mkdirs(new Path(s"$targetDir/$batch"))
+      val entries =
+        try sm.entries.zipWithIndex.map { case (e, i) =>
+          val abs = resolve(stagingDir, e.path)
+          if (underTarget(abs)) {
+            // the clone's zero-copy reference back into the target tree:
+            // an ordinary relative entry again
+            e.copy(path = qualifiedPath(spark, abs).stripPrefix(targetCanon + "/"),
+              seq = 0L)
+          } else {
+            // a STAGED file: copy it (and its bloom sidecars) into the
+            // target tree — indexed name, two staged part-00000s from
+            // different batches must never collide. An external ref into
+            // a THIRD table (a clone of a clone) is not ours to move.
+            require(qualifiedPath(spark, abs)
+              .startsWith(qualifiedPath(spark, stagingDir) + "/"),
+              s"publishClone: $stagingDir references $abs, which lives in " +
+                "neither the staging nor the target tree (a clone of a " +
+                "clone?) — compact the staging table to localize it first")
+            val name = s"f$i-${new Path(abs).getName}"
+            val dst = new Path(s"$targetDir/$batch/$name")
+            e.sidecarBloomCols.foreach { c =>
+              val sideFrom = sidecarBloomPath(stagingDir, e.path, c)
+              val sideTo = sidecarBloomPath(targetDir, s"$batch/$name", c)
+              f.mkdirs(sideTo.getParent)
+              copyStaged(sideFrom, sideTo)
+            }
+            copyStaged(new Path(abs), dst)
+            e.copy(path = s"$batch/$name", seq = 0L)
+          }
+        } catch { case t: Throwable =>
+          f.delete(new Path(s"$targetDir/$batch"), true): Unit
+          throw t
+        }
+      // content fully replaces: schema-op lists clear (the staged census
+      // carries final names), target's ledger carries (its streaming
+      // writers' exactly-once state survives the publish)
+      Publish(Manifest(tm.version + 1, tm.ledger, sm.statsCols, entries,
+        bloomCols = sm.bloomCols, bloomFpp = sm.bloomFpp),
+        tm.version + 1, Seq(s"$batch/_"))
     }
     // the publish is durable: best-effort delete of the staging
     // originals (anything left rides the dropped carcass to gc_dropped)
@@ -4501,7 +4345,7 @@ object SnapshotTable {
     // the TARGET tree belongs to the target now; the carcass holds no
     // live files and gc_dropped sweeps it past the grace)
     markDropped(spark, stagingDir)
-    tvs.last + 1
+    published
   }
 
   /** Fold every pending merge-on-read delete into the data and clear
@@ -4516,63 +4360,48 @@ object SnapshotTable {
     * themselves stay on disk for time travel until vacuum. Returns
     * the committed version (the current head when no deletes are
     * pending). */
-  def applyDeletes(spark: SparkSession, dir: String): Long = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"applyDeletes on $dir lost 20 straight races; giving up")
-      val headV = versions(spark, dir).lastOption.getOrElse(
-        throw new IllegalArgumentException(s"snapshot table $dir has no committed version"))
-      val m = readManifest(spark, dir, headV)
-      if (m.deletes.isEmpty) return headV
-      val touched = m.deletes.flatMap { d =>
-        val eligible = m.entries.filter(_.seq < d.seq)
-        if (eligible.isEmpty) Nil
-        else if (isDv(d)) {
-          // a delete vector NAMES its files — the fold is
-          // file-granular by construction, no key probing needed
-          val named = d.dvFiles.map(_._1).toSet
-          eligible.filter(e => named.contains(e.path))
+  def applyDeletes(spark: SparkSession, dir: String): Long =
+    transact(spark, dir, "applyDeletes") { m =>
+      if (m.deletes.isEmpty) Done(m.version)
+      else {
+        val touched = m.deletes.flatMap { d =>
+          val eligible = m.entries.filter(_.seq < d.seq)
+          if (eligible.isEmpty) Nil
+          else if (isDv(d)) {
+            // a delete vector NAMES its files — the fold is
+            // file-granular by construction, no key probing needed
+            val named = d.dvFiles.map(_._1).toSet
+            eligible.filter(e => named.contains(e.path))
+          } else {
+            // the delete recorded its keys under the names current at
+            // ITS commit — map both frame and key list to today's
+            val cur = d.keyCols.map(k => currentName(m, k, d.seq))
+            val keyFrame = d.keyCols.zip(cur)
+              .foldLeft(spark.read
+                .parquet(d.paths.map(p => resolve(dir, p)): _*)
+                .select(d.keyCols.map(col): _*)) { case (kf, (o, n)) =>
+                if (o == n) kf else kf.withColumnRenamed(o, n)
+              }.distinct()
+            touchedFiles(spark, dir, m, keyFrame, cur, eligible)
+          }
+        }.groupBy(_.path).map(_._2.head).toSeq
+        val next = m.version + 1
+        if (touched.isEmpty) {
+          // no eligible file holds any doomed key: clearing the list is
+          // a metadata-only commit (logical contents unchanged)
+          Publish(m.copy(version = next, deletes = Nil), next)
         } else {
-          // the delete recorded its keys under the names current at
-          // ITS commit — map both frame and key list to today's
-          val cur = d.keyCols.map(k => currentName(m, k, d.seq))
-          val keyFrame = d.keyCols.zip(cur)
-            .foldLeft(spark.read
-              .parquet(d.paths.map(p => resolve(dir, p)): _*)
-              .select(d.keyCols.map(col): _*)) { case (kf, (o, n)) =>
-              if (o == n) kf else kf.withColumnRenamed(o, n)
-            }.distinct()
-          touchedFiles(spark, dir, m, keyFrame, cur, eligible)
+          val untouched = m.entries.filterNot(e => touched.exists(_.path == e.path))
+          val rewritten = entriesFrame(spark, dir, m, touched)
+          val batchFiles = writeBatch(rewritten, dir)
+          val newEntries = batchEntries(spark, dir, batchFiles, m.statsCols,
+            m.bloomCols, m.bloomFpp)
+          Publish(m.copy(version = next, deletes = Nil,
+            entries = untouched ++ newEntries.map(_.copy(seq = next))),
+            next, batchFiles)
         }
-      }.groupBy(_.path).map(_._2.head).toSeq
-      if (touched.isEmpty) {
-        // no eligible file holds any doomed key: clearing the list is
-        // a metadata-only commit (logical contents unchanged)
-        if (tryPublish(spark, dir,
-          Manifest(headV + 1, m.ledger, m.statsCols, m.entries,
-            bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-            renames = m.renames, drops = m.drops, adds = m.adds),
-          carry = m.segments))
-          return headV + 1
-      } else {
-        val untouched = m.entries.filterNot(e => touched.exists(_.path == e.path))
-        val rewritten = entriesFrame(spark, dir, m, touched)
-        val batchFiles = writeBatch(rewritten, dir)
-        val newEntries = batchEntries(spark, dir, batchFiles, m.statsCols,
-          m.bloomCols, m.bloomFpp)
-        if (tryPublish(spark, dir,
-          Manifest(headV + 1, m.ledger, m.statsCols,
-            untouched ++ newEntries.map(_.copy(seq = headV + 1)),
-            bloomCols = m.bloomCols, bloomFpp = m.bloomFpp,
-            renames = m.renames, drops = m.drops, adds = m.adds),
-          carry = m.segments))
-          return headV + 1
-        dropOrphanBatch(spark, dir, batchFiles)
       }
     }
-    -1L // unreachable
-  }
 
   /** The pending merge-on-read deletes of a version (default head):
     * (key columns, committed seq, recorded key count) per delete —

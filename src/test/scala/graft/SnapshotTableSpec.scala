@@ -1995,4 +1995,194 @@ class SnapshotTableSpec extends SparkSpec {
     assert((n, covered, scanned, tot) == ((31L, 1, 1, 4)),
       s"got ($n, $covered, $scanned, $tot)") // hours 0..30 inclusive
   }
+
+  // ---------------------------------------------------------------
+  // The optimistic-commit seam, for every commit kind
+  // ---------------------------------------------------------------
+
+  private val kv = Seq("id", "v")
+
+  /** Stage `rows` under `$dir/$name` the way a DSv2 writer does:
+    * dir-relative parquet paths no manifest names yet. */
+  private def stageFiles(dir: String, name: String, rows: Seq[(Long, String)]): Seq[String] = {
+    rows.toDF(kv: _*).repartition(1).write.parquet(s"$dir/$name")
+    new java.io.File(s"$dir/$name").listFiles()
+      .map(_.getName).filter(_.endsWith(".parquet")).map(n => s"$name/$n").toSeq
+  }
+
+  private val under10 = SnapshotTable.PredRange("id", None, Some((10L, false)))
+
+  /** (kind, base table, the commit under test, head ids after it). A
+    * concurrent append of id 100 lands inside the commit's first
+    * attempt; the commit must lose, re-validate on the new head and
+    * republish on top of it. */
+  private val raceCases: Seq[(String, String => Unit, String => Long, Seq[Long])] = Seq(
+    ("commitMerge",
+      d => SnapshotTable.commitAppend(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF(kv: _*), d),
+      d => SnapshotTable.commitMerge(Seq((2L, "m"), (4L, "m")).toDF(kv: _*), d, Seq("id")),
+      Seq(1L, 2L, 3L, 4L, 100L)),
+    ("commitDelete",
+      d => SnapshotTable.commitAppend(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF(kv: _*), d),
+      d => SnapshotTable.commitDelete(Seq(2L).toDF("id"), d, Seq("id")),
+      Seq(1L, 3L, 100L)),
+    ("applyDeletes",
+      { d =>
+        SnapshotTable.commitAppend(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF(kv: _*), d)
+        SnapshotTable.commitDeleteMoR(Seq(2L).toDF("id"), d, Seq("id"))
+      },
+      d => SnapshotTable.applyDeletes(spark, d),
+      Seq(1L, 3L, 100L)),
+    ("compactSmallFiles",
+      { d =>
+        SnapshotTable.commitAppend(Seq((1L, "a"), (2L, "b")).toDF(kv: _*), d)
+        SnapshotTable.commitAppend(Seq((3L, "c")).toDF(kv: _*), d)
+      },
+      d => SnapshotTable.compactSmallFiles(spark, d, 1L << 20, 1L << 20),
+      Seq(1L, 2L, 3L, 100L)),
+    ("compactWhere",
+      { d =>
+        SnapshotTable.commitAppend(Seq((1L, "a"), (2L, "b")).toDF(kv: _*), d,
+          statsCols = Seq("id"))
+        SnapshotTable.commitAppend(Seq((3L, "c")).toDF(kv: _*), d)
+      },
+      d => SnapshotTable.compactWhere(spark, d, col("id") < 50L, 1L << 20, 1L << 20)._1,
+      Seq(1L, 2L, 3L, 100L)),
+    ("compactBucketsSmallFiles",
+      // five single-row files into two buckets: one bucket holds ≥ 2
+      d => (1L to 5L).foreach(i => SnapshotTable.commitAppend(
+        Seq((i, "a")).toDF(kv: _*), d, bucket = Some(("id", 2)))),
+      d => SnapshotTable.compactBucketsSmallFiles(spark, d, 1L << 20, 1L << 20, ("id", 2)),
+      Seq(1L, 2L, 3L, 4L, 5L, 100L)),
+    ("restore",
+      { d =>
+        SnapshotTable.commitAppend(Seq((1L, "a")).toDF(kv: _*), d)
+        SnapshotTable.commitAppend(Seq((2L, "b")).toDF(kv: _*), d)
+      },
+      d => SnapshotTable.restore(spark, d, 1L),
+      Seq(1L)), // the racer's append stays readable at its own version
+    ("commitRenameColumn",
+      d => SnapshotTable.commitAppend(Seq((1L, "a")).toDF(kv: _*), d),
+      d => SnapshotTable.commitRenameColumn(spark, d, "v", "w"),
+      Seq(1L, 100L)),
+    ("commitDropColumn",
+      d => SnapshotTable.commitAppend(Seq((1L, "a")).toDF(kv: _*), d),
+      d => SnapshotTable.commitDropColumn(spark, d, "v"),
+      Seq(1L, 100L)),
+    ("commitAddColumn",
+      d => SnapshotTable.commitAppend(Seq((1L, "a")).toDF(kv: _*), d),
+      d => SnapshotTable.commitAddColumn(spark, d, "z",
+        org.apache.spark.sql.types.LongType),
+      Seq(1L, 100L)),
+    ("deleteFilesWhere",
+      { d =>
+        SnapshotTable.commitAppend(Seq((1L, "a"), (2L, "b")).toDF(kv: _*), d,
+          statsCols = Seq("id"))
+        SnapshotTable.commitAppend(Seq((20L, "c")).toDF(kv: _*), d)
+      },
+      d => SnapshotTable.deleteFilesWhere(spark, d, under10),
+      Seq(20L, 100L)),
+    ("commitReplaceWhere",
+      { d =>
+        SnapshotTable.commitAppend(Seq((1L, "a"), (2L, "b")).toDF(kv: _*), d,
+          statsCols = Seq("id"))
+        SnapshotTable.commitAppend(Seq((20L, "c")).toDF(kv: _*), d)
+      },
+      d => SnapshotTable.commitReplaceWhere(Seq((5L, "new")).toDF(kv: _*), d,
+        Some(under10), col("id") < 10L),
+      Seq(5L, 20L, 100L)),
+    ("commitReplacePartitions",
+      { d =>
+        SnapshotTable.commitAppend(Seq((1L, "a"), (2L, "b")).toDF(kv: _*), d,
+          statsCols = Seq("id"))
+        SnapshotTable.commitAppend(Seq((20L, "c")).toDF(kv: _*), d)
+      },
+      d => SnapshotTable.commitReplacePartitions(spark, d,
+        stageFiles(d, "dyn-spec", Seq((5L, "new"))), Some(under10), col("id") < 10L),
+      Seq(5L, 20L, 100L)))
+
+  raceCases.foreach { case (kind, setup, commit, expected) =>
+    test(s"lost race: $kind republishes on top of a concurrent append") {
+      val dir = freshDir()
+      setup(dir)
+      val head = SnapshotTable.versions(spark, dir).last
+      val v = withRace {
+        SnapshotTable.commitAppend(Seq((100L, "race")).toDF(kv: _*), dir): Unit
+      } {
+        commit(dir)
+      }
+      assert(v == head + 2, s"$kind must lose the race and republish at head + 2")
+      assert(ids(SnapshotTable.read(spark, dir, Some(head + 1))).contains(100L),
+        "the racer's append must stay committed")
+      assert(ids(SnapshotTable.read(spark, dir)) == expected,
+        s"$kind must apply on top of the racer's head")
+    }
+  }
+
+  test("a commit that loses every race gives up with the one budget message, leaving no orphans") {
+    val dir = freshDir()
+    SnapshotTable.commitAppend(Seq((1L, "a")).toDF(kv: _*), dir)
+    // the racer's own commit passes through the same seam: re-entrancy
+    // guarded so it commits once per attempt of the commit under test
+    val racing = new java.util.concurrent.atomic.AtomicBoolean(false)
+    SnapshotTable.testRaceHook = () =>
+      if (racing.compareAndSet(false, true))
+        try SnapshotTable.commitAppend(Seq((100L, "race")).toDF(kv: _*), dir): Unit
+        finally racing.set(false)
+    val boom =
+      try intercept[IllegalArgumentException] {
+        SnapshotTable.commitMerge(Seq((1L, "m")).toDF(kv: _*), dir, Seq("id"))
+      } finally SnapshotTable.testRaceHook = () => ()
+    assert(boom.getMessage == s"requirement failed: merge on $dir lost 20 straight races; giving up",
+      boom.getMessage)
+    assert(SnapshotTable.versions(spark, dir).last == 21L, "one racer commit per attempt")
+    assert(ids(SnapshotTable.read(spark, dir)) == 1L +: Seq.fill(20)(100L),
+      "the merge must not have landed")
+    assert(SnapshotTable.gcOrphans(spark, dir, graceMs = 0L) == 0,
+      "every losing attempt must have swept its own batch")
+  }
+
+  test("a crash right before publish: head unchanged, gcOrphans reclaims the staged files, a stream batch then lands exactly once") {
+    final class Crash extends RuntimeException("crash before publish")
+    val dir = freshDir()
+    SnapshotTable.commitAppend(Seq((1L, "a"), (2L, "b")).toDF(kv: _*), dir)
+    def rows: Seq[(Long, String)] = SnapshotTable.read(spark, dir)
+      .select("id", "v").as[(Long, String)].collect().sorted.toSeq
+    def crashes(kind: String)(run: => Any): Unit = {
+      val head = SnapshotTable.versions(spark, dir).last
+      val before = rows
+      SnapshotTable.testRaceHook = () => throw new Crash
+      try intercept[Crash](run) finally SnapshotTable.testRaceHook = () => ()
+      assert(SnapshotTable.versions(spark, dir).last == head, s"$kind: no version may land")
+      assert(rows == before, s"$kind: the head's rows must be unchanged")
+      assert(SnapshotTable.gcOrphans(spark, dir, graceMs = 0L) > 0,
+        s"$kind: the staged files must be reclaimable")
+      assert(SnapshotTable.gcOrphans(spark, dir, graceMs = 0L) == 0,
+        s"$kind: nothing unreferenced may survive the sweep")
+    }
+    crashes("append") {
+      SnapshotTable.commitAppend(Seq((3L, "c")).toDF(kv: _*), dir)
+    }
+    crashes("overwrite") {
+      SnapshotTable.commitOverwrite(Seq((9L, "o")).toDF(kv: _*), dir)
+    }
+    def upsert() = SnapshotTable.commitStreamUpsertMoR(
+      Seq((1L, "u")).toDF(kv: _*), dir, Seq("id"), batchId = 7L, appId = "up")
+    crashes("MoR upsert")(upsert())
+    crashes("DV update") {
+      SnapshotTable.commitUpdateVectorsWhere(spark, dir, col("id") === 2L,
+        Map("v" -> lit("z")))
+    }
+    // a sink epoch stages where the streaming sink's writers do
+    def sinkBatch(tag: String) = SnapshotTable.commitStreamFiles(spark, dir,
+      stageFiles(dir, s"sink-spec-$tag-e3", Seq((3L, "s"))), batchId = 3L, appId = "sink")
+    crashes("sink batch")(sinkBatch("a"))
+    // the restarted writers re-run the same batch keys: each lands once
+    assert(upsert().nonEmpty)
+    assert(upsert().isEmpty, "a replayed upsert epoch must no-op")
+    assert(sinkBatch("b").nonEmpty)
+    assert(sinkBatch("c").isEmpty, "a replayed sink epoch must no-op")
+    assert(rows == Seq((1L, "u"), (2L, "b"), (3L, "s")))
+    assert(SnapshotTable.gcOrphans(spark, dir, graceMs = 0L) == 0,
+      "the replays must sweep their own staged files")
+  }
 }
